@@ -24,8 +24,8 @@ identical job measured 11.4k docs/s in one window and 5.1k in another. So:
 Spark config for the timed job (differs from defaults deliberately):
   - arrow.maxRecordsPerBatch=512: small batches let JVM<->Python transfer
     overlap Python compute (measured ~2x at 32 cores vs the 10k default
-    on the chained-UDF path; still beneficial for the fused single-stage
-    default);
+    on a since-removed chained-UDF path; still beneficial for the fused
+    single-stage transform);
   - AQE off for this job: the transform is a single shuffle-free stage per
     partition, AQE's stage-wise materialization only adds latency here
     (measured ~1.2-1.7x). AQE stays ON for the relational queries in
@@ -159,9 +159,12 @@ def _session(cores: int, job: str):
     spark.sparkContext.setLogLevel("ERROR")
     if not master.startswith("local["):
         # separate executor JVMs spawn their own Python workers, which do
-        # not inherit this process's sys.path -- ship the package exactly
-        # as a real spark-submit --py-files launch would.
-        spark.sparkContext.addPyFile(os.path.join(REPO, "pipeline.zip"))
+        # not inherit this process's sys.path -- ship the package, zipped
+        # from the current source, exactly as a real spark-submit
+        # --py-files launch would.
+        from BENCH.cluster_parity import build_zip
+
+        spark.sparkContext.addPyFile(build_zip())
     return spark
 
 

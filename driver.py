@@ -133,8 +133,8 @@ def main(argv: list[str] | None = None) -> int:
     spark = (
         builder
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # small Arrow batches overlap JVM<->Python transfer with UDF compute
-        # in the chained-ArrowEvalPython stage (see bench_scaling.py)
+        # small Arrow batches overlap JVM<->Python transfer with compute in
+        # the fused ArrowEvalPython stage (see bench_scaling.py)
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "512")
         .getOrCreate()
     )

@@ -7,7 +7,13 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from wikisource_latin_text_cleaner_spark.functions import rules
+from wikisource_latin_text_cleaner_spark.functions import (
+    classify,
+    langid,
+    perplexity,
+    pii,
+    rules,
+)
 from wikisource_latin_text_cleaner_spark.operators import skew
 from wikisource_latin_text_cleaner_spark.operators.pipeline import (
     PipelineConfig,
@@ -50,12 +56,24 @@ def test_spark_output_matches_reference_labels(spark, transformed):
     assert checked == 300
 
 
-def test_transform_has_no_shuffle(spark):
+#: every fused-UDF component on: driver.py --mode web plus a perplexity
+#: threshold near the median ppx of the fixture's langid-passing docs
+WEB_FULL = dict(extensions=rules.ExtensionConfig(), classify=True,
+                langid=True, perplexity_threshold=11.2, pii_scrub=True)
+
+
+@pytest.mark.parametrize("kw", [
+    dict(langid=False, classify=False),
+    WEB_FULL,
+], ids=["reference", "web"])
+def test_transform_has_no_shuffle(spark, kw):
+    """One Python stage, no shuffle: the whole per-document pipeline is a
+    single ArrowEvalPython (vectorization constraint, BASELINE.md §2)."""
     df = synth.pages_dataframe(spark, 10, seed=7)  # no repartition in source
-    pipe = QualityFilterPipeline(PipelineConfig(langid=False, classify=False))
+    pipe = QualityFilterPipeline(PipelineConfig(**kw))
     plan = pipe.transform(df)._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan, plan
-    assert "ArrowEvalPython" in plan  # vectorization constraint (BASELINE.md §2)
+    assert plan.count("Exchange") == 0, plan
+    assert plan.count("ArrowEvalPython") == 1, plan
 
 
 def test_metrics_lineage(spark, pages_df, transformed):
@@ -71,24 +89,22 @@ def test_metrics_lineage(spark, pages_df, transformed):
 
 def test_rule_metrics_per_pattern_counts(spark):
     """ref A4/step5: per-orthography-rule substitution counts surface in the
-    rule_hits column and as variant:<rule> rows in the metrics table, with
-    identical counts on the fused and chained UDF paths."""
+    rule_hits column and as variant:<rule> rows in the metrics table."""
     filler = ("gallia est omnis divisa in partes tres quarum unam incolunt "
               "belgae aliam aquitani tertiam qui ipsorum lingua celtae. ") * 5
     text = filler + "michi placet et michi manet liber tercius hic."
     pages = spark.createDataFrame(
         [("u-variant", None, None, text, "la")], synth.PAGES_SCHEMA_DDL
     )
-    for fused in (True, False):
-        pipe = QualityFilterPipeline(PipelineConfig(
-            langid=False, classify=False, rule_metrics=True, fused=fused))
-        out = pipe.transform(pages)
-        row = out.collect()[0]
-        assert row.rule_hits["michi"] == 2, (fused, row.rule_hits)
-        assert row.rule_hits["tercius"] == 1
-        hits = {r.rule: r.rule_hits for r in pipe.metrics(out).collect()
-                if r.rule.startswith("variant:")}
-        assert hits == {"variant:michi": 2, "variant:tercius": 1}
+    pipe = QualityFilterPipeline(PipelineConfig(
+        langid=False, classify=False, rule_metrics=True))
+    out = pipe.transform(pages)
+    row = out.collect()[0]
+    assert row.rule_hits["michi"] == 2, row.rule_hits
+    assert row.rule_hits["tercius"] == 1
+    hits = {r.rule: r.rule_hits for r in pipe.metrics(out).collect()
+            if r.rule.startswith("variant:")}
+    assert hits == {"variant:michi": 2, "variant:tercius": 1}
 
 
 def test_rule_metrics_off_by_default(spark, transformed):
@@ -154,31 +170,61 @@ def test_salted_repartition_defuses_skew(spark, pages_df):
     assert top[0]["n_docs"] > top[-1]["n_docs"]
 
 
-def test_pii_scrub(spark):
-    rows = [("u1", "scribe ad admin@example.com et vide https://ex.org/a 4111111111111111")]
-    df = spark.createDataFrame(rows, "url string, text string")
-    from wikisource_latin_text_cleaner_spark.functions import udfs
-
-    out = df.select(udfs.pii_udf("text").alias("p")).select("p.*").collect()[0]
-    assert "<EMAIL>" in out["text"] and "<URL>" in out["text"] and "<NUMBER>" in out["text"]
-    assert out["pii_spans"] == 3
+def test_pii_scrub():
+    text = "scribe ad admin@example.com et vide https://ex.org/a 4111111111111111"
+    scrubbed, counts = pii.scrub_pii(text)
+    assert "<EMAIL>" in scrubbed and "<URL>" in scrubbed and "<NUMBER>" in scrubbed
+    assert sum(counts.values()) == 3
 
 
-def test_fused_equals_chained(spark, pages_df):
-    """The single-pass fused UDF path is row-identical to the composable
-    chained-UDF path for the same config."""
-    from pyspark.sql import functions as F
+def _python_composition(text, threshold):
+    """Plain-Python twin of the fused UDF for WEB_FULL: the same functions.*
+    calls, in the same order, plus the chars_removed arithmetic."""
+    v = rules.evaluate_document(text, rules.MIN_SIZE_BYTES, rules.ExtensionConfig())
+    keep, reasons, cleaned = v.keep, list(v.drop_reasons), v.clean_text
+    c = classify.classify_document(text or "")
+    lang_pred, lang_margin = langid.predict(cleaned or "")
+    if keep and lang_pred != "la":
+        reasons.append("langid")
+        keep = False
+    ppx = perplexity.perplexity(cleaned or "")
+    if keep and ppx > threshold:
+        reasons.append("perplexity")
+        keep = False
+    scrubbed, counts = pii.scrub_pii(cleaned or "")
+    if keep:
+        cleaned = scrubbed
+    return dict(
+        keep=keep, drop_reasons=reasons, clean_text=cleaned,
+        period=c["period"], genre=c["genre"], confidence=c["confidence"],
+        lang_pred=lang_pred, lang_margin=lang_margin, ppx=ppx,
+        pii_spans=sum(counts.values()),
+        chars_removed=len(text or "") - len(cleaned or ""),
+    )
 
-    from wikisource_latin_text_cleaner_spark.functions import rules
 
-    kw = dict(extensions=rules.ExtensionConfig(), classify=True, langid=True,
-              perplexity_threshold=1e9, pii_scrub=True)
-    a = QualityFilterPipeline(PipelineConfig(fused=True, **kw)).transform(pages_df)
-    b = QualityFilterPipeline(PipelineConfig(fused=False, **kw)).transform(pages_df)
-    assert a.columns == b.columns
-    fix = lambda df: df.withColumn("drop_reasons", F.concat_ws("|", "drop_reasons"))  # noqa: E731
-    assert fix(a).exceptAll(fix(b)).count() == 0
-    assert fix(b).exceptAll(fix(a)).count() == 0
+def test_fused_matches_python_composition(spark, pages_df):
+    """Every output column of the fused transform equals a per-document
+    composition of the plain-Python calls, with the langid and perplexity
+    gates both firing."""
+    out = QualityFilterPipeline(PipelineConfig(**WEB_FULL)).transform(pages_df)
+    assert out.columns == [
+        "url", "warc_ts", "lang", "keep", "drop_reasons", "clean_text",
+        "period", "genre", "confidence", "lang_pred", "lang_margin", "ppx",
+        "pii_spans", "chars_removed",
+    ]
+    got = {r["url"]: r.asDict() for r in out.collect()}
+    pages = pages_df.select("url", "warc_ts", "lang", "text").collect()
+    assert len(got) == len(pages) == 300
+    reasons = []
+    for p in pages:
+        exp = dict(url=p["url"], warc_ts=p["warc_ts"], lang=p["lang"],
+                   **_python_composition(p["text"], WEB_FULL["perplexity_threshold"]))
+        assert got[p["url"]] == exp, p["url"]
+        reasons += exp["drop_reasons"]
+    # the langid and perplexity gates both fire and both let docs through
+    assert "langid" in reasons and "perplexity" in reasons
+    assert any(r["keep"] for r in got.values())
 
 
 def test_resume_rejects_cross_scheme_manifest(spark, pages_df, tmp_path):

@@ -1,11 +1,12 @@
 """The quality-filter pipeline: pages -> (pages_clean columns, metrics).
 
-One declarative DataFrame chain (SURVEY.md §3.4): scan -> [salt] -> verdict
-(Arrow UDF applying the byte-identical step3..6 composition + gates) ->
-extension gates (langid / perplexity / PII) -> keep/drop decision. There is
-NO shuffle in the transform itself -- Catalyst plans scan -> ArrowEvalPython
--> project/filter per partition; only the metrics aggregation (tiny) and an
-optional skew-defusing repartition shuffle anything.
+One declarative DataFrame chain (SURVEY.md §3.4): scan -> [salt] -> one
+fused Arrow UDF (the byte-identical step3..6 composition + gates, classify,
+langid / perplexity gates, PII scrub) -> optional Catalyst URL and Gopher
+gates -> keep/drop decision. There is NO shuffle in the transform itself --
+Catalyst plans scan -> ArrowEvalPython -> project/filter per partition; only
+the metrics aggregation (tiny) and an optional skew-defusing repartition
+shuffle anything.
 
 Quarantine semantics (ref: Text Cleaner/step1_remove_short_files.py:215-231
 backs removed files up rather than losing them): dropped rows are never
@@ -37,10 +38,6 @@ class PipelineConfig:
     pii_scrub: bool = False
     #: 0 disables the salted repartition (use when input partitioning is fine)
     salt_partitions: int = 0
-    #: single-pass UDF (one ArrowEvalPython stage, text crosses the Arrow
-    #: boundary once) vs the composable chained-UDF path; same output by
-    #: differential test
-    fused: bool = True
     #: derive text from the html binary column when text is null (CC rows
     #: often carry only the raw capture); the html column stays pruned from
     #: the scan when this is off
@@ -86,6 +83,18 @@ class PipelineConfig:
     gopher_repetition_gate: bool = False
 
 
+def _gate(df: DataFrame, fail, reason) -> DataFrame:
+    """Flip keep=true rows where ``fail`` holds to keep=false and append
+    ``reason`` (a string Column) to their drop_reasons. Already-dropped
+    rows keep their reasons untouched."""
+    gate_fail = F.col("keep") & fail
+    return df.withColumn(
+        "drop_reasons",
+        F.when(gate_fail, F.array_union("drop_reasons", F.array(reason)))
+        .otherwise(F.col("drop_reasons")),
+    ).withColumn("keep", F.col("keep") & ~gate_fail)
+
+
 class QualityFilterPipeline:
     """Composable per-document filter/scrub over a `pages`-shaped DataFrame."""
 
@@ -97,7 +106,8 @@ class QualityFilterPipeline:
 
         Output columns: url, warc_ts, lang, keep, drop_reasons, clean_text
         [, period, genre, confidence][, lang_pred, lang_margin][, ppx]
-        [, pii_spans]. Column pruning: only url/warc_ts/text/lang are read.
+        [, pii_spans][, rule_hits], chars_removed. Column pruning: only
+        url/warc_ts/text/lang are read.
         """
         cfg = self.config
         if cfg.html_fallback:
@@ -128,80 +138,17 @@ class QualityFilterPipeline:
         if cfg.salt_partitions:
             df = salted_repartition(df, "url", cfg.salt_partitions)
 
-        if cfg.fused:
-            return self._apply_quality_gates(
-                self._apply_url_gate(self._transform_fused(df))
-            )
-
-        verdict_udf = udfs.make_verdict_udf(cfg.min_size_bytes, cfg.extensions,
-                                            rule_metrics=cfg.rule_metrics)
-        df = df.withColumn("verdict", verdict_udf("text"))
-        if cfg.classify:
-            df = df.withColumn("cls", udfs.classify_udf("text"))
-        df = df.select(
-            "url",
-            "warc_ts",
-            "lang",
-            F.col("verdict.keep").alias("keep"),
-            F.col("verdict.drop_reasons").alias("drop_reasons"),
-            F.col("verdict.clean_text").alias("clean_text"),
-            F.coalesce(F.length("text"), F.lit(0)).alias("_n_raw"),
-            *((F.col("verdict.rule_hits").alias("rule_hits"),)
-              if cfg.rule_metrics else ()),
-            *(
-                (
-                    F.col("cls.period").alias("period"),
-                    F.col("cls.genre").alias("genre"),
-                    F.col("cls.confidence").alias("confidence"),
-                )
-                if cfg.classify
-                else ()
-            ),
+        return self._apply_quality_gates(
+            self._apply_url_gate(self._transform_fused(df))
         )
-
-        if cfg.langid:
-            df = df.withColumn(
-                "lid", udfs.langid_udf("clean_text")
-            ).select("*", F.col("lid.lang_pred").alias("lang_pred"),
-                     F.col("lid.lang_margin").alias("lang_margin")).drop("lid")
-            gate_fail = F.col("keep") & ~F.col("lang_pred").isin(*self.config.allowed_langs)
-            df = df.withColumn(
-                "drop_reasons",
-                F.when(gate_fail, F.array_union("drop_reasons", F.array(F.lit("langid"))))
-                .otherwise(F.col("drop_reasons")),
-            ).withColumn("keep", F.col("keep") & ~gate_fail)
-
-        if cfg.perplexity_threshold is not None:
-            df = df.withColumn("ppx", udfs.perplexity_udf("clean_text"))
-            gate_fail = F.col("keep") & (F.col("ppx") > cfg.perplexity_threshold)
-            df = df.withColumn(
-                "drop_reasons",
-                F.when(gate_fail, F.array_union("drop_reasons", F.array(F.lit("perplexity"))))
-                .otherwise(F.col("drop_reasons")),
-            ).withColumn("keep", F.col("keep") & ~gate_fail)
-
-        if cfg.pii_scrub:
-            df = (
-                df.withColumn("pii", udfs.pii_udf("clean_text"))
-                .withColumn("clean_text", F.when(F.col("keep"), F.col("pii.text"))
-                            .otherwise(F.col("clean_text")))
-                .withColumn("pii_spans", F.col("pii.pii_spans"))
-                .drop("pii")
-            )
-        # ref A4 counter: chars removed vs the FINAL clean text (post-PII),
-        # so both transform paths report identical numbers
-        return self._apply_quality_gates(self._apply_url_gate(df.withColumn(
-            "chars_removed",
-            F.col("_n_raw") - F.coalesce(F.length("clean_text"), F.lit(0)),
-        ).drop("_n_raw")))
 
     def _apply_quality_gates(self, df: DataFrame) -> DataFrame:
         """Gopher quality/repetition gates over the CLEANED text, applied
-        identically after both transform paths (same discipline as the
-        langid and URL gates: only keep=true rows flip, earlier drop
-        reasons are preserved, dropped rows keep their clean_text for the
-        quarantine sink). clean_text is NULL for already-dropped rows, so
-        the ladder evaluates to NULL there and no reason is appended."""
+        after the fused UDF and the URL gate (``_gate`` discipline: only
+        keep=true rows flip, earlier drop reasons are preserved, dropped
+        rows keep their clean_text for the quarantine sink). clean_text is
+        NULL for already-dropped rows, so the ladder evaluates to NULL there
+        and no reason is appended."""
         cfg = self.config
         if not cfg.gopher_gate and not cfg.gopher_repetition_gate:
             return df
@@ -209,42 +156,24 @@ class QualityFilterPipeline:
 
         if cfg.gopher_gate:
             ff = _q.gopher_first_fail(F.col("clean_text"), **(cfg.gopher_opts or {}))
-            gate_fail = F.col("keep") & ff.isNotNull()
-            df = df.withColumn(
-                "drop_reasons",
-                F.when(
-                    gate_fail,
-                    F.array_union(
-                        "drop_reasons",
-                        F.array(F.concat(F.lit("gopher:"), ff)),
-                    ),
-                ).otherwise(F.col("drop_reasons")),
-            ).withColumn("keep", F.col("keep") & ~gate_fail)
+            df = _gate(df, ff.isNotNull(), F.concat(F.lit("gopher:"), ff))
         if cfg.gopher_repetition_gate:
             # Arrow-fused battery (one UDF for all nine fractions); the
             # Catalyst fold twin is ~25x slower when all nine are needed
             rep = _q.repetition_flag_from_fracs(
                 _q.repetition_fracs_udf()(F.col("clean_text"))
             )
-            gate_fail = F.col("keep") & F.coalesce(rep, F.lit(False))
-            df = df.withColumn(
-                "drop_reasons",
-                F.when(
-                    gate_fail,
-                    F.array_union(
-                        "drop_reasons", F.array(F.lit("gopher:repetition"))
-                    ),
-                ).otherwise(F.col("drop_reasons")),
-            ).withColumn("keep", F.col("keep") & ~gate_fail)
+            df = _gate(df, F.coalesce(rep, F.lit(False)),
+                       F.lit("gopher:repetition"))
         return df
 
     def _apply_url_gate(self, df: DataFrame) -> DataFrame:
         """RefinedWeb-style URL gate (domain blocklist + keyword score),
-        applied identically after both transform paths. Pure Catalyst over
-        the url column: a literal isin for small inline lists, a broadcast
-        join for table-sized blocklists; keyword scoring is a fixed sum of
-        contains() probes. Docs failing the gate get drop reason
-        'url_blocklist' (langid-gate discipline: only keep=true rows flip,
+        applied after the fused UDF. Pure Catalyst over the url column: a
+        literal isin for small inline lists, a broadcast join for
+        table-sized blocklists; keyword scoring is a fixed sum of contains()
+        probes. Docs failing the gate get drop reason
+        'url_blocklist' (``_gate`` discipline: only keep=true rows flip,
         earlier reasons are preserved)."""
         cfg = self.config
         if cfg.url_blocklist is None and cfg.max_url_kw_hits is None:
@@ -291,21 +220,12 @@ class QualityFilterPipeline:
             blocked = blocked | (
                 _urls.url_keyword_hits(F.col("url")) > cfg.max_url_kw_hits
             )
-        gate_fail = F.col("keep") & blocked
-        return (
-            df.withColumn(
-                "drop_reasons",
-                F.when(gate_fail, F.array_union(
-                    "drop_reasons", F.array(F.lit("url_blocklist"))))
-                .otherwise(F.col("drop_reasons")),
-            )
-            .withColumn("keep", F.col("keep") & ~gate_fail)
-            .select(*cols)
-        )
+        return _gate(df, blocked, F.lit("url_blocklist")).select(*cols)
 
     def _transform_fused(self, df: DataFrame) -> DataFrame:
-        """One ArrowEvalPython stage for the whole per-document pipeline;
-        output columns identical to the chained path for the same config."""
+        """One ArrowEvalPython stage for the whole per-document pipeline:
+        the text crosses the JVM<->Python Arrow boundary once. Fields of
+        disabled components are not projected."""
         cfg = self.config
         fused = udfs.make_fused_udf(
             min_size_bytes=cfg.min_size_bytes,
@@ -337,8 +257,8 @@ class QualityFilterPipeline:
             cols.append(F.col("v.pii_spans").alias("pii_spans"))
         if cfg.rule_metrics:
             cols.append(F.col("v.rule_hits").alias("rule_hits"))
-        # ref A4 counter, last column in both paths: chars removed vs the
-        # final clean text (detailed_progress_logger.py:158-186 analog)
+        # ref A4 counter, last column: chars removed vs the final
+        # (post-PII) clean text (detailed_progress_logger.py:158-186 analog)
         cols.append(
             (F.coalesce(F.length("text"), F.lit(0))
              - F.coalesce(F.length("v.clean_text"), F.lit(0))).alias("chars_removed")
